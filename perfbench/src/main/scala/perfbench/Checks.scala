@@ -43,14 +43,13 @@ object Checks {
     }
     val volCols = Seq("daily_supply_volume", "daily_withdraw_volume",
       "daily_borrow_volume", "daily_repay_volume")
-    val got = table(spark, root, Fct).groupBy("margin_pool_id")
-      .agg(sum(lit(1)).as("n"), volCols.map(v => sum(col(v)).as(v)): _*)
+    val got = table(spark, root, Fct).groupBy("margin_pool_id").sum(volCols: _*)
       .collect().map(r => r.getString(0) -> r).toMap
     for ((pool, spec) <- (exp \ "pools").extract[Map[String, JValue]]) {
       val dec = (spec \ "decimals").extract[Int]
       for (v <- volCols) {
         val want = (spec \ "raw_volume" \ v).extract[Double] / math.pow(10, dec)
-        val have = got.get(pool).map(_.getAs[Double](v)).getOrElse(0.0)
+        val have = got.get(pool).map(_.getAs[Double](s"sum($v)")).getOrElse(0.0)
         c.expect(math.abs(have - want) <= 1e-9 * math.max(1.0, math.abs(want)),
           s"$Fct: $pool $v = $have, expected $want")
       }

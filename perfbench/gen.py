@@ -12,12 +12,10 @@ Two input sets:
   the operator queries.
 
 Both are pure functions of (seed, size): the same arguments give
-byte-identical content, which :func:`content_digest` checks.
-
-Usage: python3 gen.py deepbook|tables <out_dir> --seed N [size options]
+byte-identical content, which :func:`content_digest` checks. The sizes are
+arguments of :func:`generate`; run.py passes the benchmark's own.
 """
 
-import argparse
 import hashlib
 import json
 import os
@@ -337,12 +335,14 @@ LANGS = ["en", "zh", "es", "fr", "de"]
 LANG_P = [0.41, 0.15, 0.15, 0.15, 0.14]
 
 
-def tables(out, seed, scale):
-    """Stand-in tables at `scale` x the row counts of the sf0.1 test tables."""
+def tables(out, seed, scale, customer_scale):
+    """Stand-in tables at `scale` x the row counts of the sf0.1 test tables,
+    except the customer table (the d14 family's only input), which is at
+    `customer_scale` x."""
     rng = np.random.default_rng(seed)
     n = {"customer": 15000, "supplier": 1000, "part": 20000, "orders": 150000,
          "lineitem": 600000, "events": 100000, "documents": 5000, "embeddings": 2000}
-    n = {k: max(10, int(v * scale)) for k, v in n.items()}
+    n = {k: max(10, int(v * (customer_scale if k == "customer" else scale))) for k, v in n.items()}
     day_us = 86_400_000_000
     y1995 = 788_918_400_000_000
 
@@ -456,27 +456,3 @@ def generate(kind, out, seed, **size):
         json.dump(exp, fh, sort_keys=True)
     return exp
 
-
-def main():
-    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("kind", choices=["deepbook", "tables"])
-    ap.add_argument("out")
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--pools", type=int, default=8)
-    ap.add_argument("--days", type=int, default=30)
-    ap.add_argument("--events-per-pool-day", type=int, default=150)
-    ap.add_argument("--versions-per-pool-day", type=int, default=12)
-    ap.add_argument("--hours", type=int, default=24)
-    ap.add_argument("--scale", type=float, default=0.1)
-    a = ap.parse_args()
-    if a.kind == "deepbook":
-        generate("deepbook", a.out, a.seed, pools=a.pools, days=a.days,
-                 events_per_pool_day=a.events_per_pool_day,
-                 versions_per_pool_day=a.versions_per_pool_day, hours=a.hours)
-    else:
-        generate("tables", a.out, a.seed, scale=a.scale)
-    print(content_digest(a.out))
-
-
-if __name__ == "__main__":
-    main()

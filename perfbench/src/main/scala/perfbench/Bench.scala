@@ -20,12 +20,15 @@ import scala.util.control.NonFatal
   *
   * Workloads:
   *  - `dag_incremental`: set-up backfills the seven DeepBook models
-  *    (`RunMode.FullRefresh`) and runs one warm-up incremental run; one op =
-  *    one `RunMode.Incremental` run after one more hour of source delta.
-  *  - `query_mix`: one op = one pass over [[Queries]], each query run into
-  *    the noop sink as `graft.Bench` does.
+  *    (`RunMode.FullRefresh`) and runs [[WarmupOps]] warm-up incremental
+  *    runs; one op = one `RunMode.Incremental` run after one more hour of
+  *    source delta.
+  *  - `query_mix`: set-up fingerprints every query, which also warms the
+  *    JIT; one op = one pass over [[Queries]], each query run into the noop
+  *    sink as `graft.Bench` does.
   *
-  * With `--trace 1` ops alternate between untraced and traced; the traced
+  * With `--trace 1` ops run untraced and traced in the order U T T U,
+  * repeated, so a warming JVM favours neither side; the traced
   * ones give the per-layer metrics and the difference of the two medians is
   * the tracing overhead. The set-up backfill is traced too (`backfill.*`). */
 object Bench {
@@ -35,7 +38,8 @@ object Bench {
     "d14_fuzzy_join", "d14b_fuzzy_join_k2", "d14c_fuzzy_expand")
 
   /** Untimed ops in set-up: the JIT is still warming over the first ops of
-    * a fresh JVM (op times fall by ~30% over them). */
+    * a fresh JVM (op times fall by ~30% over them). The query mix's
+    * fingerprint pass is its warm-up. */
   val WarmupOps = 2
 
   /** Model groups of the per-layer metrics. */
@@ -110,7 +114,8 @@ object Bench {
       .config("spark.sql.shuffle.partitions", a.cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
+      // release() collects between ops; a periodic full GC could land inside one
+      .config("spark.cleaner.periodicGC.interval", "1h")
       .config("spark.local.dir", s"${a.work}/spark-local")
       .config("spark.sql.warehouse.dir", s"${a.work}/warehouse")
       .getOrCreate()
@@ -265,16 +270,16 @@ object Bench {
     private var op = 0
 
     /** Runs ops until --seconds have passed and at least three untraced ops
-      * have run (with tracing: two untraced and two traced, alternating).
-      * `body` returns the op's own timed seconds; an exception counts as a
-      * failed op and its time is left out. */
-    def loop(body: (Int, Option[Tracer]) => Double): Unit = {
+      * have run (with tracing: two untraced and two traced, U T T U), or
+      * until `available` turns false. `body` returns the op's own timed
+      * seconds; an exception counts as a failed op and its time is left out. */
+    def loop(available: => Boolean)(body: (Int, Option[Tracer]) => Double): Unit = {
       val start = now()
       def more = (if (a.trace) untraced.size < 2 || traced.size < 2 else untraced.size < 3) ||
         (now() - start) / 1e3 < a.seconds
-      while (more) {
+      while (more && available) {
         op += 1
-        val useTrace = a.trace && op % 2 == 0
+        val useTrace = a.trace && (op % 4 == 2 || op % 4 == 3)
         val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
         attempted += 1
         try {
@@ -290,6 +295,7 @@ object Bench {
         assertIdle(spark, s"op $op")
         release(spark, before)
       }
+      if (!available) log(s"inputs used up after op $op")
     }
 
     def result(): String = {
@@ -396,8 +402,7 @@ object Bench {
       DeepbookPipeline.runner(root).run(ctx(RunMode.Incremental))
     }
     setupDone()
-    r.loop { (op, t) =>
-      if (h >= hours.size) sys.error(s"all ${hours.size} generated hours are used up")
+    r.loop(h < hours.size) { (op, t) =>
       h += 1
       appendHour(a, h)
       dagRun(r, root, ctx(RunMode.Incremental), op, t)
@@ -419,19 +424,14 @@ object Bench {
       if (Files.exists(pinsPath)) (readJson(pinsPath) \ "queries").extract[Map[String, JValue]]
       else Map.empty[String, JValue]
     log("session up; fingerprint pass")
-    // every query fingerprinted against the pins, then warm-up passes into
-    // the noop sink so the timed passes start warm
+    // every query fingerprinted against the pins; this pass also warms the
+    // JIT for the timed passes into the noop sink
     val got = Queries.map { q =>
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val fp = Checks.fingerprint(SparkEntry.queries(q)(spark, a.inputs))
       release(spark, before)
       log(s"$q: $fp")
       q -> fp
-    }
-    for (_ <- 1 to WarmupOps; q <- Queries) {
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      SparkEntry.queries(q)(spark, a.inputs).write.format("noop").mode("overwrite").save()
-      release(spark, before)
     }
     if (a.writePins) {
       val body = got.map { case (q, (n, h)) => s""""$q":{"rows":$n,"hash":"$h"}""" }.mkString(",\n  ")
@@ -443,7 +443,7 @@ object Bench {
     }
     setupDone()
     val slowest = mutable.ArrayBuffer[Double]()
-    r.loop { (op, t) =>
+    r.loop(available = true) { (op, t) =>
       val gc0 = gcMs()
       val runs = Queries.map { q =>
         val before = spark.sparkContext.getPersistentRDDs.keySet.toSet

@@ -49,8 +49,8 @@ class InputsTest(unittest.TestCase):
         gen.generate("deepbook", c, 8, **TINY)
         self.assertEqual(gen.content_digest(a), gen.content_digest(b))
         self.assertNotEqual(gen.content_digest(a), gen.content_digest(c))
-        gen.generate("tables", a, 1, scale=0.002)
-        gen.generate("tables", b, 1, scale=0.002)
+        gen.generate("tables", a, 1, scale=0.002, customer_scale=0.004)
+        gen.generate("tables", b, 1, scale=0.002, customer_scale=0.004)
         self.assertEqual(gen.content_digest(a), gen.content_digest(b))
         shutil.rmtree(d)
 

@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs every SparkEntry query on
   * `sys.env("SPARK_GRAFT_SF_DIR")` and prints ONE JSON metric line.
   *
-  * Each query is fully materialized through the `noop` sink: a bare
-  * `count()` would let Catalyst eliminate final global sorts and all
-  * column projections, systematically undertiming sort/projection-heavy
-  * queries. The noop sink evaluates every row of every column and
-  * discards the bytes — pure execution cost, no disk noise.
-  *
-  * Every query runs `SPARK_GRAFT_BENCH_RUNS` times (default 3) and
+  * Each query is fully materialized through the `noop` sink
+  * ([[Harness.time]]), `SPARK_GRAFT_BENCH_RUNS` times (default 3), and
   * reports its MEDIAN: first runs carry JIT + whole-stage-codegen
   * compilation (routinely 2-4× the steady state), so single-shot numbers
   * can't tell a regression from warmup noise.
@@ -87,7 +81,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // a stale artifact from a previous run must never masquerade as this
     // sweep's numbers — drop it before any timing starts
@@ -95,84 +88,28 @@ object Bench {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not clear stale target/bench.json: $e")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // localCheckpoint blocks (the pipeline queries' shared-scan seams) are
-      // only dropped by the ContextCleaner after their DataFrames are GC'd;
-      // the 30-minute default periodicGC lets ~40 min of bench queries pile
-      // blocks up until eviction + GC thrash distorts every later timing
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Deterministic per-query block release (default on; set
-    // SPARK_GRAFT_BENCH_UNPERSIST=0 for the A/B control run). clearCache
-    // + System.gc only FREES localCheckpoint blocks once the GC happens
-    // to collect the referencing DataFrames and the async ContextCleaner
-    // drains its queue — across a 127-query alphabetical run the
-    // checkpoint-heavy early queries (d14-d17, k7, v20/v21) can pile
-    // storage blocks onto queries 40 minutes later (the r10 driver's k6
-    // 18 s vs 4 s quiet-box reading). localCheckpoint'd RDDs register in
-    // getPersistentRDDs, so between runs — when nothing can reference
-    // them — a blocking unpersist drops every block NOW, no GC involved.
-    val release = sys.env.getOrElse("SPARK_GRAFT_BENCH_UNPERSIST", "1") == "1"
-    // name -> failed-run count; a query that crashes may NOT masquerade as
-    // a fast one (a crash typically returns in milliseconds), so failures
-    // are carried into the JSON ledger alongside the timings
-    val failures = scala.collection.mutable.Map[String, Int]()
-    def materialize(name: String): Double = {
-      val times = (1 to runs).map { _ =>
-        // snapshot persisted-RDD ids BEFORE the run: the release below must
-        // drop only blocks this run created (dead localCheckpoint seams),
-        // never a block some future cross-query state still references —
-        // localCheckpoint blocks are unrecoverable once unpersisted
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          failures(name) = failures.getOrElse(name, 0) + 1
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.sqlContext.clearCache() // drop per-query caches between runs
-        if (release)
-          spark.sparkContext.getPersistentRDDs
-            .filterNot { case (id, _) => before.contains(id) }
-            .values.foreach(_.unpersist(blocking = true))
-        System.gc() // lets the ContextCleaner reap dead localCheckpoints NOW
-        sec
-      }
-      times.sorted.apply(times.size / 2)
-    }
-    // JVM/codegen warmup on the tiny flagship so the first measured query
-    // isn't charged for classloading and whole-stage-codegen compilation.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.warmUp(spark)
     // dag_fct_incremental / dag_fct_maintenance are pipeline-protocol
     // checks (two full DAG runs through the disk-based merge sink — ~14
     // write/read cycles of fixed overhead on tiny fixtures), not queries;
     // they stay in the correctness gate but would only measure sink fsync.
     // s12_scd2 is the same kind of protocol check (two batches through the
     // disk-based snapshot merge), so it too stays out of the timing set.
-    val results = (SparkEntry.queries -- ProtocolClass)
-      .keys.toSeq.sorted.map(n => n -> materialize(n))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val timed = Harness.time(spark, (SparkEntry.queries -- ProtocolClass).keys.toSeq.sorted,
+      runs, "bench")(n => SparkEntry.queries(n)(spark, sfDir))
+    val results = timed.medians
     val total = results.map(_._2).sum
     val (worstName, worst) = results.maxBy(_._2)
     // empty on a healthy run; a query with ANY crashed run is listed with
     // its failed-run count so its (fast) median can't read as a speedup
-    val failedJson = failures.toSeq.sortBy(_._1)
-      .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
+    val failedJson = Harness.json(timed.failures.toSeq.sortBy(_._1))
     // metric "total_full" (not "total"): only ONE line may carry the
     // canonical metric name, or a parser that sums/collects every metric
     // line would double-count the run. The short summary line below is the
     // canonical "total"; this full line is the complete per-query record.
     val line =
-      s"""{"metric":"total_full","value":$total,"unit":"sec","worst":$worst,"worst_query":"$worstName","sf":"$sfDir","runs_per_query":$runs,"failed_runs":$failedJson,"queries":$qs}"""
+      s"""{"metric":"total_full","value":$total,"unit":"sec","worst":$worst,"worst_query":"$worstName","sf":"$sfDir","runs_per_query":$runs,"failed_runs":$failedJson,"queries":${Harness.json(results)}}"""
     println(line)
     // The driver's artifact keeps the END of stdout and clips the head, so
     // a long line loses whatever is printed first (BENCH_r05's tail started
@@ -181,19 +118,12 @@ object Bench {
     // and last so a line-oriented parser picks it up. Top slowest queries
     // ride along; the complete per-query map lives in the full line above
     // and in target/bench.json.
-    val slowest = results.sortBy(-_._2).take(8)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val slowest = Harness.json(results.sortBy(-_._2).take(8))
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","worst":$worst,"worst_query":"$worstName","sf":"$sfDir","runs_per_query":$runs,"failed_runs":$failedJson,"queries":$slowest}""")
     // persist the full line so every per-query number survives the round
     // (BENCH_r03 lost its first 10 alphabetical entries to a 2000-char cut)
-    try {
-      val out = java.nio.file.Paths.get("target/bench.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.writeString(out, line + "\n")
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not persist target/bench.json: $e")
-    }
+    Harness.persist("target/bench.json", line)
     spark.stop()
   }
 }

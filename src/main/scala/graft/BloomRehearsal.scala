@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.incremental.SnapshotStore
 
@@ -26,22 +25,10 @@ import graft.incremental.SnapshotStore
 object BloomRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val root = java.nio.file.Files.createTempDirectory("graft-bloom-sf").toString
-    var failures = 0
-    def check(name: String)(cond: => Boolean): Unit = {
-      val ok = try cond catch { case e: Throwable =>
-        System.err.println(s"  [$name] threw: ${e.getMessage}"); false }
-      println(f"  $name%-58s ${if (ok) "OK" else "FAIL"}")
-      if (!ok) failures += 1
-    }
+    val checks = new Harness.Checks
+    import checks.check
     try {
       val docs = Sources.testdata(spark, sfDir)("documents")
         .select(col("doc_id"), sha2(col("text"), 256).as("digest"),
@@ -102,8 +89,6 @@ object BloomRehearsal {
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
-    println(s"${if (failures == 0) "PASS" else "FAIL"} ($failures failures) at $sfDir")
-    spark.stop()
-    if (failures > 0) sys.exit(1)
+    checks.finish(spark, sfDir)
   }
 }

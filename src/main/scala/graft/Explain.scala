@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: prints `explain("formatted")` for the given query
   * names (default: the scan- and shuffle-heavy ones) so pushdown,
@@ -11,13 +10,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("s1_event_scan", "q1_pricing_summary", "q5_region_revenue",
         "o2_topk_per_group", "d1_exact_dedup", "d2_minhash_lsh", "v1_cosine_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.{CorpusPrep, PipelineQueries}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Tier-agnostic invariant gate for the operators whose DuckDB oracles
@@ -18,24 +17,9 @@ import org.apache.spark.sql.functions._
 object Invariants {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reap dead localCheckpoint blocks promptly (see Bench): the d6/pipe
-      // recomputes checkpoint large frames back-to-back in one session
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failures = 0
-    def check(name: String)(cond: => Boolean): Unit = {
-      val ok = try cond catch { case e: Throwable =>
-        System.err.println(s"  [$name] threw: ${e.getMessage}"); false }
-      println(f"  $name%-52s ${if (ok) "OK" else "FAIL"}")
-      if (!ok) failures += 1
-    }
+    val spark = Harness.session()
+    val checks = new Harness.Checks
+    import checks.check
 
     // ---- d6: cluster assignment vs the pair graph ----
     val pairsJ = PipelineQueries.d2MinhashLsh(spark, sfDir)
@@ -749,8 +733,6 @@ object Invariants {
       }
     }
 
-    println(s"${if (failures == 0) "PASS" else "FAIL"} ($failures failures) at $sfDir")
-    spark.stop()
-    if (failures > 0) sys.exit(1)
+    checks.finish(spark, sfDir)
   }
 }

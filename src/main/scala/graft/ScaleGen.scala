@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,14 +46,7 @@ object ScaleGen {
     val out = args.drop(1).headOption.getOrElse("/tmp/graft-sf1")
     val k = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val skewPct = args.drop(3).headOption.map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     // events' physical ts type has varied across driver data drops (INT64
     // nanos vs timestamp[us]) — go through the engine's type-aware shim so

@@ -58,14 +58,34 @@ object PipelineQueries {
     * "overlap independent jobs"): Spark's scheduler runs jobs from
     * several driver threads side by side, so two training/checkpoint
     * chains with no data dependency need not serialize their barriers.
-    * Failures propagate (Await rethrows). Used where both arguments run
-    * eager actions (localCheckpoint / collect) at build time. */
-  private[queries] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
+    * Used where both arguments run eager actions (localCheckpoint /
+    * collect) at build time. `b` runs on a pool thread with its jobs
+    * tagged; if `a` throws, `b`'s jobs are cancelled until it ends, and
+    * `a`'s exception is rethrown with `b`'s failure attached as suppressed,
+    * so a failed branch never leaves its sibling's jobs running. */
+  private[queries] def inParallel[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fb = Future(b)
-    val ra = a
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext
+    val tag = s"graft-inParallel-${java.util.UUID.randomUUID()}"
+    val fb = Future(blocking {
+      sc.addJobTag(tag)
+      sc.setInterruptOnCancel(true) // a cancelled task stops mid-partition
+      try b finally {
+        sc.removeJobTag(tag)
+        sc.setLocalProperty("spark.job.interruptOnCancel", null)
+      }
+    })
+    val ra = try a catch { case e: Throwable =>
+      // b may start new jobs after a cancel lands between two of them
+      while (!fb.isCompleted) {
+        sc.cancelJobsWithTag(tag)
+        scala.util.Try(Await.ready(fb, 100.millis))
+      }
+      fb.value.flatMap(_.failed.toOption).foreach(e.addSuppressed)
+      throw e
+    }
     (ra, Await.result(fb, Duration.Inf))
   }
 
@@ -667,13 +687,8 @@ object PipelineQueries {
     * rows); candidates dedup before the per-pair verify; the
     * neighborhood frame is localCheckpoint'ed for its self-join (the
     * d2/d4 lesson). */
-  val d14bFuzzyJoinK2: Q = (spark, dir) => d14bImpl(spark, dir)
-
-  /** d14b's body with the verified-pairs checkpoint parameterized for the
-    * r15 same-boot A/B (see [[d14cImpl]]). */
-  private[graft] def d14bImpl(spark: SparkSession, dir: String,
-                              npCkpt: Boolean = true): DataFrame =
-    d14bNamePairs(spark, dir, materialize = npCkpt)
+  val d14bFuzzyJoinK2: Q = (spark, dir) =>
+    d14bNamePairs(spark, dir)
       .select(col("a_id"), col("b_id"), col("dist").cast("long").as("dist"),
         col("a_n"), col("b_n"), (col("a_n") * col("b_n")).as("n_id_pairs"))
       .orderBy(col("a_id"), col("b_id"))
@@ -684,8 +699,7 @@ object PipelineQueries {
     * expansion): one pipeline, no drift. Returns one row per verified
     * name pair: (a_id, b_id) = representative ids, both names, both
     * group sizes, dist (int, 1..2). */
-  private[graft] def d14bNamePairs(spark: SparkSession, dir: String,
-                                   materialize: Boolean = true): DataFrame = {
+  private[graft] def d14bNamePairs(spark: SparkSession, dir: String): DataFrame = {
     val cust = t(spark, dir, "customer")
       .select(col("c_custkey").as("id"), col("c_name").as("name"))
     val reps = cust.groupBy(col("name"))
@@ -746,14 +760,9 @@ object PipelineQueries {
         col("n").as("b_n")), "b_id")
       .withColumn("dist", expr("levenshtein(a_name, b_name, 2)"))
       .filter(col("dist") >= 0) // thresholded form returns -1 past the bound
-    // materialize the verified pairs ONCE (r14 opt, guide §1/§2.4) when the
-    // consumer's final global orderBy would otherwise re-execute the verify
-    // chain in the range exchange's sampling job. d14b wants this (its sort
-    // reads the pairs directly); d14c does NOT (it checkpoints its own
-    // union tail, so this barrier would be a second, redundant
-    // materialization — the r14 driver measured that double barrier as a
-    // 1.6× regression on d14c).
-    if (materialize) verified.localCheckpoint() else verified
+    // checkpointed: the consumers' global sort would re-run the verify chain
+    // in its sampling job (r15 A/B, d14b at sf1: 13.5 s vs 15.9 s without)
+    verified.localCheckpoint()
   }
 
   /** Per-side id cap for [[d14cFuzzyExpand]]: each duplicate group
@@ -780,26 +789,7 @@ object PipelineQueries {
     * ≤ (Cap² + Cap(Cap−1)/2)·|groups| rows regardless of replication
     * factor — the k² blowup d14b's name-level report avoids stays
     * avoided here. */
-  val d14cFuzzyExpand: Q = (spark, dir) => d14cImpl(spark, dir)
-
-  /** d14c's body with the two checkpoint barriers parameterized for the
-    * same-boot A/B the r15 round runs (the r14 driver measured the
-    * both-barriers shape as a 1.6× regression). Declared defaults carry
-    * the measured winner of the r15 interleaved A/B (5 reps, one JVM):
-    * at sf0.1 np0_tail1 10.84 s ≈ np1_tail0 11.16 s < np0_tail0 12.98 s,
-    * but at the sf1 rehearsal tier the ranking FLIPS — np1_tail0 18.0 s
-    * ≪ np0_tail0 23.2 s < np1_tail1 26.7 s < np0_tail1 26.9-45.6 s —
-    * because the union tail is OUTPUT-sized (tens of millions of id
-    * pairs at sf1): materializing it costs more than re-running the
-    * output-sized expansion joins in the sort's sampling job, while the
-    * verify chain behind the name-pairs barrier must NOT re-run twice.
-    * np1_tail0 is the scale-robust choice (ties the sf0.1 winner within
-    * noise, 1.5-2.5× better than every tail-checkpointed shape at sf1).
-    * d14b, whose sort reads the pairs directly, keeps its barrier at
-    * both tiers (sf0.1: 11.26 vs 12.61 s; sf1: 13.5 vs 15.9 s). */
-  private[graft] def d14cImpl(spark: SparkSession, dir: String,
-                              npCkpt: Boolean = true,
-                              tailCkpt: Boolean = false): DataFrame = {
+  val d14cFuzzyExpand: Q = (spark, dir) => {
     val cust = t(spark, dir, "customer")
       .select(col("c_custkey").as("id"), col("c_name").as("name"))
     // K smallest ids per duplicate group, keyed by the group's
@@ -811,7 +801,7 @@ object PipelineQueries {
       .filter(col("rn") <= D14cCap)
       .select(col("rid"), col("id"))
       .localCheckpoint() // feeds both expansion fetches AND the self-join
-    val np = d14bNamePairs(spark, dir, materialize = npCkpt)
+    val np = d14bNamePairs(spark, dir)
     val cross = np
       .join(capped.select(col("rid").as("a_id"), col("id").as("ia")), "a_id")
       .join(capped.select(col("rid").as("b_id"), col("id").as("ib")), "b_id")
@@ -822,12 +812,8 @@ object PipelineQueries {
         col("x.rid") === col("y.rid") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
         lit(0L).as("dist"))
-    // checkpoint before the global sort: the range exchange's sampling job
-    // would otherwise re-execute both expansion joins and the same-name
-    // self-join a second time (r14 opt — see d14bNamePairs)
-    val tail = cross.unionByName(same)
-    (if (tailCkpt) tail.localCheckpoint() else tail)
-      .orderBy(col("a_id"), col("b_id"))
+    // no checkpoint on the output-sized tail (r15 A/B at sf1: 18.0 s vs 26.7 s with)
+    cross.unionByName(same).orderBy(col("a_id"), col("b_id"))
   }
 
   // ---- D15: incremental near-dup admission through the store ---------------
@@ -2949,7 +2935,7 @@ object PipelineQueries {
     // r15 opt (§2.6): the coarse training and the PQ training are
     // independent eager chains — overlap their jobs
     val ((_, byCell), (_, byM)) =
-      inParallel(ivfTrainLloyd(spark, dir), pqTrainLloyd(spark, dir))
+      inParallel(spark)(ivfTrainLloyd(spark, dir), pqTrainLloyd(spark, dir))
     quantEncoder(byCell, byM)
   }
 
@@ -3240,7 +3226,7 @@ object PipelineQueries {
   val v26ConvergedIvfServe: Q = (spark, dir) => {
     // r15 opt (§2.6): the coarse convergence loop and the PQ training are
     // independent eager chains — overlap their jobs
-    val (state, (_, byM)) = inParallel({
+    val (state, (_, byM)) = inParallel(spark)({
       val u = kmQuantized(spark, dir)
       var st = kmSeedState
       for (_ <- 1 to V25Iters) st = lloydNext(u, st)
@@ -6504,7 +6490,7 @@ object PipelineQueries {
   val d13DedupEval: Q = (spark, dir) => {
     // r15 opt (§2.6): the simhash fingerprint pass and d2's LSH+verify
     // chain are independent eager builds — overlap their jobs
-    val (sh, exact0) = inParallel(
+    val (sh, exact0) = inParallel(spark)(
       d3Fingerprints(spark, dir).localCheckpoint(), // self-join (see d2)
       d2Pairs(spark, dir))
     val mask = (1L << SimBandBits) - 1
@@ -7806,9 +7792,7 @@ object PipelineQueries {
     * training report) and t28 (encoding the corpus with the trained
     * merges) -- one training, no drift. */
   private[queries] def bpeTrainLoop(spark: SparkSession, dir: String,
-                           iters: Int = T27Iters,
-                           ckptEvery: Int = 1)
-      : (Seq[DataFrame], DataFrame) = {
+                           iters: Int = T27Iters): (Seq[DataFrame], DataFrame) = {
     val S = "\u0001"; val E = "\u0002" // start/end token markers
     val terms = fanOut(spark, t(spark, dir, "documents"))
       .select(explode(split(lower(col("text")), " ")).as("term"))
@@ -7858,9 +7842,9 @@ object PipelineQueries {
       cur = cur
         .withColumn("seq", replace(col("seq"),
           lit(S + c1 + E + S + c2 + E), lit(S + c1 + c2 + E)))
-      // step k+1 never replays more than ckptEvery−1 earlier merges; the
-      // r15 A/B decides how often the vocab-sized frame is worth a barrier
-      if (it % ckptEvery == 0 || it == iters) cur = cur.localCheckpoint()
+      // checkpoint every round so step k+1 never replays earlier merges
+      // (r15 A/B: every round, every 3rd and never tied at sf0.1)
+      cur = cur.localCheckpoint()
       Seq((it.toLong, c1, c2, row.getLong(2), row.getLong(3)))
         .toDF("iter", "c1", "c2", "pf", "n_types")
     }

@@ -47,12 +47,15 @@ class ShingleIdsSpec extends SparkSpec {
     import spark.implicits._
     GraftFunctions.ensureRegistered(spark)
     val texts = Seq("the quick brown fox", "x y z w", "a b")
-    val wholestage = texts.toDF("text")
-      .select(expr("shingle_ids(text)")).collect().map(_.getSeq[Long](0))
-    val interpreted = texts.map(t => ShingleIds.compute(
+    def run(ts: Seq[Option[String]]) = ts.toDF("text")
+      .select(expr("shingle_ids(text)")).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getSeq[Long](0).toSeq)).toSeq
+    val direct = texts.map(t => Some(ShingleIds.compute(
       org.apache.spark.unsafe.types.UTF8String.fromString(t))
-      .toLongArray().toSeq)
-    assert(wholestage.map(_.toSeq).toSeq == interpreted)
+      .toLongArray().toSeq))
+    val withNull = texts.map(Option(_)) :+ None
+    assert(run(withNull) == direct :+ None)
+    assert(interpreted(run(withNull)) == direct :+ None)
   }
 
   test("null text yields null") {

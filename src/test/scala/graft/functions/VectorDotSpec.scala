@@ -22,11 +22,20 @@ class VectorDotSpec extends SparkSpec {
 
   test("interpreted eval matches codegen") {
     GraftFunctions.ensureRegistered(spark)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val r = df.select(expr("vector_dot(a, b)")).as[Double].collect()
-      assert(r.toSeq == Seq(32.0, 0.0))
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    // element-nullable arrays take the per-element null branch
+    val edges = Seq(
+      (Seq(Option(1.0), Option(2.0), Option(3.0)), Seq(Option(4.0), Option(5.0), Option(6.0))),
+      (Seq(Option(1.0), Option(2.0), Option(3.0)), Seq(Option(1.0))), // mismatched
+      (Seq(Option(1.0), None), Seq(Option(1.0), Option(2.0)))) // null element
+      .toDF("a", "b")
+    def dot(d: org.apache.spark.sql.DataFrame) =
+      d.select(expr("vector_dot(a, b)")).as[Option[Double]].collect().toSeq
+    val codegen = dot(edges)
+    interpreted {
+      assert(dot(df) == Seq(Some(32.0), Some(0.0)))
+      assert(dot(edges) == Seq(Some(32.0), None, None))
+    }
+    assert(codegen == Seq(Some(32.0), None, None))
   }
 
   test("mismatched lengths yield null, not a truncated dot product") {

@@ -23,11 +23,20 @@ class VectorL2SqLongSpec extends SparkSpec {
 
   test("interpreted eval matches codegen") {
     GraftFunctions.ensureRegistered(spark)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val r = df.select(expr("vector_l2sq(a, b)")).as[Long].collect()
-      assert(r.toSeq == Seq(25L, 2000000000000L))
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    // element-nullable arrays take the per-element null branch
+    val edges = Seq(
+      (Seq(Option(1L), Option(2L), Option(3L)), Seq(Option(4L), Option(6L), Option(3L))),
+      (Seq(Option(1L), Option(2L), Option(3L)), Seq(Option(1L))), // mismatched
+      (Seq(Option(1L), None), Seq(Option(1L), Option(2L)))) // null element
+      .toDF("a", "b")
+    def l2(d: org.apache.spark.sql.DataFrame) =
+      d.select(expr("vector_l2sq(a, b)")).as[Option[Long]].collect().toSeq
+    val codegen = l2(edges)
+    interpreted {
+      assert(l2(df) == Seq(Some(25L), Some(2000000000000L)))
+      assert(l2(edges) == Seq(Some(25L), None, None))
+    }
+    assert(codegen == Seq(Some(25L), None, None))
   }
 
   test("mismatched lengths yield null, like the zip_with pad") {

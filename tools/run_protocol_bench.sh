@@ -4,7 +4,8 @@
 # Usage: tools/run_protocol_bench.sh [sfdir] [cpus]
 set -e
 export SPARK_GRAFT_SF_DIR=${1:-${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}}
-export SPARK_GRAFT_CPUS=${2:-${SPARK_GRAFT_CPUS:-32}}
+# cpus: the argument, else SPARK_GRAFT_CPUS, else every available processor
+if [ -n "${2:-}" ]; then export SPARK_GRAFT_CPUS="$2"; fi
 cd /root/repo
 source tools/_spark_env.sh
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-32g} \
